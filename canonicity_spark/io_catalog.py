@@ -98,8 +98,9 @@ class StageCatalog:
         layout hint like ``partition_by``: backends that support it
         write per-row-group bloom filters on those columns so a later
         read pushing an In/EqualTo on them skips row groups whose bloom
-        proves no match (similarity.prune_to_values — bounds probe IO
-        by the batch's touched row groups instead of the archive).
+        proves no match (similarity.prune_to_keys / prune_to_values —
+        a probe within MAX_PROBE_VALUES keys reads its touched row
+        groups instead of the archive's partitions).
         Same contract: ignoring it is always correct, just unpruned."""
         from canonicity_spark import metrics
 

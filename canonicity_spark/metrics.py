@@ -11,8 +11,38 @@ totals and the stage timing report.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation
+from collections.abc import Iterator
+from contextlib import contextmanager
+
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+
+
+#: AQE coalescing that keeps shuffle parallelism: the override the CC
+#: loop and the near-dup verify scope over their candidate-scale DAGs
+#: (the session default is size-first, see session.py).
+PARALLELISM_FIRST = {"spark.sql.adaptive.coalescePartitions.parallelismFirst": "true"}
+
+
+@contextmanager
+def scoped_conf(spark: SparkSession, overrides: dict[str, str]) -> Iterator[None]:
+    """Apply session-conf ``overrides`` for the body and restore every
+    key on every exit path (a key unset before is unset again). The one
+    place the engine flips conf per operator: the pipeline's per-stage
+    overrides, the CC loop's and the near-dup verify's AQE
+    ``parallelismFirst`` scopes. Session-global while it is open, like
+    any ``spark.conf.set`` — the driver runs one operator at a time."""
+    saved = {k: spark.conf.get(k, None) for k in overrides}
+    for k, v in overrides.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
 
 
 def observed(df: DataFrame, name: str) -> tuple[DataFrame, Observation]:

@@ -14,6 +14,8 @@ import os
 
 from pyspark.sql import SparkSession
 
+from canonicity_spark.similarity import MAX_PROBE_VALUES
+
 DEFAULT_CONF: dict[str, str] = {
     # AQE: runtime re-plan — coalesce small shuffle partitions, split
     # skewed join partitions. Free wins at every scale.
@@ -94,14 +96,17 @@ DEFAULT_CONF: dict[str, str] = {
     # splits to use the machine. On a real cluster with TB-scale inputs
     # this knob is left at the site default — file count dominates.
     "spark.sql.files.maxPartitionBytes": str(16 * 1024 * 1024),
-    # Push large IN lists into the parquet scan as real In predicates
-    # instead of the min/max range the 10-value default degrades them
-    # to — a range is useless on uniformly-hashed probe keys, while an
-    # In evaluates against row-group bloom filters and min/max stats
-    # (the streaming archive probes, similarity.prune_to_values: probe
-    # IO bounded by batch-touched row groups, not archive size). The
-    # list is micro-batch-sized by construction (MAX_PROBE_VALUES cap).
-    "spark.sql.parquet.pushdown.inFilterThreshold": str(70000),
+    # Push archive-probe IN lists into the parquet scan as real In
+    # predicates instead of the min/max range the 10-value default
+    # degrades them to — a range is useless on uniformly-hashed probe
+    # keys, while an In evaluates against row-group bloom filters and
+    # min/max stats (similarity.prune_to_keys / prune_to_values: probe
+    # IO bounded by the touched row groups, not archive size). Derived
+    # from the probe cap, never set by hand: every probe pushes at most
+    # MAX_PROBE_VALUES literals, so each reaches the scan as equalities,
+    # and a larger list (which the probes never build) would get the
+    # stack-safe range. The cap's comment has the measured limits.
+    "spark.sql.parquet.pushdown.inFilterThreshold": str(MAX_PROBE_VALUES),
 }
 
 

@@ -25,7 +25,7 @@ from pyspark.sql.types import DoubleType, LongType
 
 import pyarrow as pa
 
-from canonicity_spark import cache
+from canonicity_spark import cache, metrics
 
 
 def _dot(a, b):
@@ -491,16 +491,34 @@ def _verify_pairs_jaccard(
         .union(pairs.select(F.col("doc_b")))
         .distinct()
     )
-    if KEY_PREFIX_COL in base.columns:
-        # archive texts stored partitioned by doc-id hash prefix
-        # (streaming archive / catalog-built index): prune the text read
-        # to the partitions holding candidate docs — candidates are
-        # pair-scale, so the widest per-increment archive scan (the
-        # text column) stops being O(archive) (VERDICT round 5 #2)
-        cand_ids = cand_ids.withColumn(KEY_PREFIX_COL, key_prefix_col(["doc_id"]))
-        # partitions AND row groups holding candidate ids, one collect
-        # (pairs are pinned, so it reads the cached candidate frame)
-        base = prune_to_keys(base, KEY_PREFIX_COL, "doc_id", cand_ids)
+    # The first action below executes the whole candidate DAG (banding,
+    # bucket self-join, pair dedup, id distinct) into the pins, so it
+    # runs under AQE parallelismFirst=true (the CC-kernel pattern,
+    # canonicalize.py): under the session default (parallelismFirst=
+    # false, right for the pipeline's vocabulary-scale stages) AQE
+    # coalesces the candidate-scale shuffle reads toward the 64 MB
+    # advisory size and under-parallelizes them — alternated A/B on the
+    # 100k corpus: pairs stage 4.05s -> 2.64s min-of-4. Output is
+    # partitioning-invariant.
+    with metrics.scoped_conf(pairs.sparkSession, metrics.PARALLELISM_FIRST):
+        if KEY_PREFIX_COL in base.columns:
+            # archive texts stored partitioned by doc-id hash prefix
+            # (streaming archive / catalog-built index): prune the text
+            # read to the partitions (and, within the probe cap, the row
+            # groups) holding candidate docs — candidates are
+            # pair-scale, so the widest per-increment archive scan (the
+            # text column) stops being O(archive) (VERDICT round 5 #2).
+            # The same collect yields the exact candidate-doc count.
+            cand_ids = cand_ids.withColumn(
+                KEY_PREFIX_COL, key_prefix_col(["doc_id"])
+            )
+            base, n_cand = prune_to_keys(base, KEY_PREFIX_COL, "doc_id", cand_ids)
+        else:
+            # bounded row probe (the band_join guard pattern — O(bound),
+            # never O(sets))
+            n_cand = (
+                cand_ids.select(F.lit(1)).limit(broadcast_max_docs + 1).count()
+            )
     # round 8: shingle sets come from the vectorized Arrow kernel as
     # sorted int64 hashes (was: the interpreted-HOF shingles_col over
     # strings — see the hash-set block above for the equivalence
@@ -515,35 +533,13 @@ def _verify_pairs_jaccard(
     # round 8 (2nd pass): the pair⋈set joins used to shuffle — and the
     # second join re-exchanged every PAIR row already carrying its
     # ~2 KB sh_a array (~2 GB at 990k candidates on the 100k corpus).
-    # When the candidate-doc set is broadcast-bounded (bounded row
-    # probe, the band_join guard pattern — O(bound), never O(sets)),
-    # broadcast the set table into BOTH joins: the pairs then stream
-    # through two BroadcastHashJoins with zero exchange. Measured
-    # (alternated A/B, min-of-4, 990,716 pairs / 75,488 candidate
-    # docs): 4.27s -> 2.29s, with far tighter walls (no fat shuffle to
-    # contend with ambient load). Above the bound the shuffled join is
-    # the correct archive-scale shape and is kept unchanged.
-    # The bounded probe is the ACTION that executes the whole candidate
-    # DAG (banding, bucket self-join, pair dedup, id distinct) into the
-    # pins above — so it is also the right place to scope AQE
-    # parallelismFirst=true (the CC-kernel pattern, canonicalize.py):
-    # under the session default (parallelismFirst=false, right for the
-    # pipeline's vocabulary-scale stages) AQE coalesces the
-    # candidate-scale shuffle reads toward the 64 MB advisory size and
-    # under-parallelizes them — alternated A/B on the 100k corpus:
-    # pairs stage 4.05s -> 2.64s min-of-4. Scoped + restored in a
-    # finally; output is partitioning-invariant.
-    spark_conf = pairs.sparkSession.conf
-    _PF = "spark.sql.adaptive.coalescePartitions.parallelismFirst"
-    _pf_before = spark_conf.get(_PF, None)
-    spark_conf.set(_PF, "true")
-    try:
-        n_cand = cand_ids.select(F.lit(1)).limit(broadcast_max_docs + 1).count()
-    finally:
-        if _pf_before is None:
-            spark_conf.unset(_PF)
-        else:
-            spark_conf.set(_PF, _pf_before)
+    # When the candidate-doc set is broadcast-bounded, broadcast the set
+    # table into BOTH joins: the pairs then stream through two
+    # BroadcastHashJoins with zero exchange. Measured (alternated A/B,
+    # min-of-4, 990,716 pairs / 75,488 candidate docs): 4.27s -> 2.29s,
+    # with far tighter walls (no fat shuffle to contend with ambient
+    # load). Above the bound the shuffled join is the correct
+    # archive-scale shape and is kept unchanged.
     set_a = sets.select(
         F.col("doc_id").alias("doc_a"),
         F.col("_sh").alias("sh_a"),
@@ -980,54 +976,68 @@ def prune_to_prefixes(archive: DataFrame, col: str, probe: DataFrame) -> DataFra
     return archive.filter(F.col(col).isin(vals))
 
 
-#: Cap on the number of distinct probe-key values collected for
-#: value-level data skipping. Micro-batches sit far below it (a 1k-doc
-#: batch carries ~1k fingerprints / ~16k band hashes); the cap bounds
-#: driver memory (<= ~4 MB of strings) and the pushed-predicate size,
-#: and a probe above it falls back to prefix-only pruning — correct
-#: either way. Must stay below the session's parquet
-#: pushdown.inFilterThreshold or the pushed In degrades to a min/max
-#: range, which skips nothing on uniformly-hashed keys.
-MAX_PROBE_VALUES = 65536
+#: Cap on the distinct probe-key values one archive probe pushes into
+#: the scan as an In predicate; ``session.DEFAULT_CONF`` derives the
+#: parquet ``pushdown.inFilterThreshold`` from it, so a list within the
+#: cap always reaches the row-group bloom/min-max filters as literal
+#: equalities instead of degrading to a min/max range (which skips
+#: nothing on uniformly-hashed keys). Sized by two measured limits:
+#: - parquet-mr evaluates a pushed In as one left-deep chain of OR-ed
+#:   equalities, and the recursion over that chain overflows the
+#:   executor thread stack (java.lang.StackOverflowError; the task and
+#:   its retries fail) from ~1,500 values: on a bloom-filtered stage at
+#:   local[4], 1,000 values passed, 1,500 and 4,000 failed, 2,000 passed
+#:   once — the depth that overflows varies with the thread's stack use;
+#: - every literal costs one py4j round trip to build the Column
+#:   (0.4-0.6 ms each at local[4]), and the planner re-walks the list
+#:   in every later action over the pruned frame — a 16k-value band
+#:   probe spent ~7 s in the calls alone; 256 keeps it near 0.1 s.
+#: Above the cap a probe is partition-pruned only (its <= N_PREFIX_PARTS
+#: prefixes): no value-level row-group skipping, so its IO is the
+#: touched partitions' probe columns — still exact, because every probe
+#: site equi-joins (semi/anti) the pruned frame against the batch.
+MAX_PROBE_VALUES = 256
 
 
 def prune_to_values(
     archive: DataFrame,
     col: str,
     probe: DataFrame,
-    max_values: int = MAX_PROBE_VALUES,
 ) -> DataFrame:
     """Value-level data skipping on top of partition pruning (VERDICT
     round 6 #1): partition pruning saturates at N_PREFIX_PARTS — any
     batch of a few hundred uniformly-hashed keys touches all 32
     prefixes and the probe degenerates to a full scan of the archive's
     (narrow) probe columns. This collects the probe's distinct key
-    values (micro-batch-sized by the ingest contract, hard-capped) and
-    pushes them as an In predicate INTO the archive scan, where parquet
+    values (at most MAX_PROBE_VALUES + 1) and pushes them as an In
+    predicate INTO the archive scan, where parquet
     row-group bloom filters (written by the archive stages — see
     ``write_stage(bloom_filter=...)``) and min/max stats skip every row
-    group holding none of the values. IO then scales with the batch's
-    touched row groups, not the archive: at a 100-TB archive a row
-    group holds ~a few hundred thousand keys out of ~10^10, so a 1k-key
-    probe reads <= 1k row groups no matter how large the archive grows.
+    group holding none of the values. IO then scales with the probe's
+    touched row groups, not the archive: a 256-key probe reads <= 256
+    row groups no matter how large the archive grows.
 
     Exactly output-equivalent to the unpruned frame for any consumer
     that equi-joins (semi/anti/inner) on ``col``: rows removed have key
     values the probe side does not contain, so they can never match.
-    A probe larger than ``max_values`` returns the frame unchanged
+    A probe larger than the cap returns the frame unchanged
     (prefix pruning still applies upstream)."""
     vals = [
         r[0]
-        for r in probe.select(col).distinct().limit(max_values + 1).collect()
+        for r in probe.select(col).distinct().limit(MAX_PROBE_VALUES + 1).collect()
     ]
     if not vals:
         return archive.filter(F.lit(False))
-    if len(vals) > max_values:
+    if len(vals) > MAX_PROBE_VALUES:
         return archive
-    # NULL-safe sort (ADVICE round 7): a NULL probe key would make
-    # sorted() raise comparing None; isin(NULL) never matches an
-    # equi-join key anyway, so dropping it preserves output. The sort
-    # itself only keeps the pushed-predicate plan string deterministic.
+    return _isin_or_empty(archive, col, vals)
+
+
+def _isin_or_empty(archive: DataFrame, col: str, vals) -> DataFrame:
+    """``archive`` filtered to ``col IN vals``. NULL-safe (ADVICE round
+    7): a NULL key never matches an equi-join, so dropping it preserves
+    output; the sort only keeps the pushed-predicate plan string
+    deterministic."""
     non_null = sorted(v for v in vals if v is not None)
     if not non_null:
         return archive.filter(F.lit(False))
@@ -1039,41 +1049,44 @@ def prune_to_keys(
     kp_col: str,
     val_col: str,
     probe: DataFrame,
-    max_values: int = MAX_PROBE_VALUES,
-) -> DataFrame:
-    """Fused prefix + value pruning in ONE driver action: collect the
-    probe's distinct (prefix, key) pairs once and derive both the
-    partition filter and the In predicate from it — the separate
-    prune_to_prefixes + prune_to_values pair costs two executions of
-    the probe's DAG per probe site, and a micro-batch runs three probe
-    sites (measured: the driver actions are a visible share of
-    per-batch latency at small scale).
+) -> tuple[DataFrame, int]:
+    """Prefix + value pruning of an archive probe from ONE bounded
+    driver action. Returns ``(pruned archive, n_keys)``: ``n_keys`` is
+    the probe's exact count of distinct (prefix, key) pairs — its
+    distinct key count when the prefix derives from the key alone, as
+    for doc ids and fingerprints (the near-dup verify's ``n_cand``).
 
-    Correctness guard: when the collect hits the ``max_values`` cap the
-    pair list may be INCOMPLETE — deriving prefixes from it would prune
-    partitions that hold matches (missed duplicates), so the oversized
-    case falls back to the always-bounded prefix-only collect
-    (<= N_PREFIX_PARTS ints) and skips value pruning, exactly the
-    prune_to_prefixes behavior."""
+    One aggregate per prefix returns the prefix, its exact distinct-key
+    count and at most MAX_PROBE_VALUES of its keys, so the driver
+    result is bounded by N_PREFIX_PARTS x MAX_PROBE_VALUES values
+    whatever the probe size. When the total fits the cap, the value
+    lists are complete and both the partition filter and the In
+    predicate are pushed; above it, the partition filter alone (every
+    prefix is in the result, so none holding a match is pruned) — the
+    over-cap path needs no second collect.
+
+    Exactly output-equivalent to the unpruned frame for any consumer
+    that equi-joins (semi/anti/inner) on ``val_col`` and ``kp_col``
+    (see prune_to_values); NULL keys never match and are dropped."""
     rows = (
-        probe.select(kp_col, val_col)
-        .distinct()
-        .limit(max_values + 1)
+        probe.where(F.col(kp_col).isNotNull() & F.col(val_col).isNotNull())
+        .groupBy(kp_col)
+        .agg(F.collect_set(val_col).alias("_vals"))
+        .select(
+            kp_col,
+            F.size("_vals").alias("_n"),
+            F.slice("_vals", 1, MAX_PROBE_VALUES).alias("_vals"),
+        )
         .collect()
     )
     if not rows:
-        return archive.filter(F.lit(False))
-    if len(rows) > max_values:
-        return prune_to_prefixes(archive, kp_col, probe)
-    # NULL-safe (ADVICE round 7): NULL keys cannot match an equi-join,
-    # so dropping them before the sort preserves output
-    prefixes = sorted({r[0] for r in rows if r[0] is not None})
-    vals = sorted({r[1] for r in rows if r[1] is not None})
-    if not prefixes or not vals:
-        return archive.filter(F.lit(False))
-    return archive.filter(F.col(kp_col).isin(prefixes)).filter(
-        F.col(val_col).isin(vals)
-    )
+        return archive.filter(F.lit(False)), 0
+    n_keys = sum(r["_n"] for r in rows)
+    pruned = archive.filter(F.col(kp_col).isin(sorted(r[kp_col] for r in rows)))
+    if n_keys > MAX_PROBE_VALUES:
+        return pruned, n_keys
+    vals = {v for r in rows for v in r["_vals"]}
+    return _isin_or_empty(pruned, val_col, vals), n_keys
 
 
 def _bucket_pair_candidates(
@@ -1115,12 +1128,12 @@ def _bucket_pair_candidates(
     if KEY_PREFIX_COL in all_rows.columns:
         if KEY_PREFIX_COL not in new_rows.columns:
             new_rows = new_rows.withColumn(KEY_PREFIX_COL, key_prefix_col(key_cols))
-        # one fused collect: partition pruning + value-level row-group
-        # skipping on the hash-like key component (band_hash / band_val
-        # / bucket — key_cols[-1] by convention); the value In is a
-        # SUPERSET of the semi-join below, pushed into the scan so
-        # bloom/min-max stats bound IO by the batch (VERDICT round 6 #1)
-        all_rows = prune_to_keys(
+        # one bounded collect: partition pruning, plus value-level
+        # row-group skipping on the hash-like key component (band_hash /
+        # band_val / bucket — key_cols[-1] by convention) when the batch
+        # holds at most MAX_PROBE_VALUES keys; the value In is a SUPERSET
+        # of the semi-join below, which keeps the output exact either way
+        all_rows, _n = prune_to_keys(
             all_rows, KEY_PREFIX_COL, key_cols[-1], new_rows
         )
         # broadcast of the new side's distinct bucket keys: increment-

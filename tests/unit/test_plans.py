@@ -115,3 +115,83 @@ def test_salted_agg_is_two_phase(spark):
     plan = _optimized(_salted_min(df, "k", "v", 8))
     # two Aggregate nodes on distinct groupings (k+salt, then k)
     assert plan.count("Aggregate") >= 2 and "_salt" in plan
+
+#: Driver actions one process_batch runs against a non-empty archive:
+#: the funnel counters (first), the fingerprint, band and candidate-text
+#: probes (one bounded collect each; the last also yields the verify's
+#: candidate-doc count), the CC edge fetch (toPandas), and the bands and
+#: curated stage writes. A probe over the value cap takes no extra one.
+BATCH_ACTION_BUDGET = 7
+
+
+@pytest.mark.parametrize("over_cap", [False, True])
+def test_process_batch_action_budget(spark, tmp_path, monkeypatch, over_cap):
+    """Pin the driver actions (collect, count, toPandas, first, stage
+    writes) inside one micro-batch against a two-part archive, with all
+    three archive probes under the value cap and all three over it."""
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    from canonicity_spark import similarity, streaming
+    from canonicity_spark.io_catalog import StageCatalog
+
+    base = (
+        "the cat sat on the mat and the dog ran to the park for a while "
+        "and it was a good day to be out in the sun with the birds singing "
+        "over the quiet green field near the old stone bridge."
+    )
+
+    def batch(rows):
+        return spark.createDataFrame(
+            [(i, t, "en", "web", len(t)) for i, t in rows],
+            "doc_id long, text string, lang string, source string, n_chars int",
+        )
+
+    conf = streaming.StreamConf(
+        work_dir=str(tmp_path / "ingest"), near_dup_threshold=0.8
+    )
+    streaming.process_batch(spark, batch([(1, base)]), 0, conf)
+    other = (
+        "a slow river winds past the old mill and the farmers bring their "
+        "grain to town on the first market day of every month of the year."
+    )
+    streaming.process_batch(spark, batch([(2, other)]), 1, conf)
+    # the probes carry 2 fingerprints, 32 band keys and 3 candidate
+    # docs: all within the cap, or all over a cap of 1
+    if over_cap:
+        monkeypatch.setattr(similarity, "MAX_PROBE_VALUES", 1)
+    actions = []
+    depth = [0]
+
+    def counted(name, orig):
+        def wrapper(*args, **kwargs):
+            if depth[0] == 0:
+                actions.append(name)
+            depth[0] += 1
+            try:
+                return orig(*args, **kwargs)
+            finally:
+                depth[0] -= 1
+
+        return wrapper
+
+    for owner, name in [
+        (DataFrame, "collect"), (DataFrame, "count"), (DataFrame, "toPandas"),
+        (DataFrame, "first"), (StageCatalog, "write_stage"),
+    ]:
+        monkeypatch.setattr(owner, name, counted(name, getattr(owner, name)))
+    stats = streaming.process_batch(
+        spark,
+        batch([(3, base.replace("good day", "fine day")), (4, "x " * 3),
+               (5, base.replace("dog", "hen"))]),
+        2,
+        conf,
+    )
+    monkeypatch.undo()
+    # both gate-passing docs are near-dups of archived doc 1
+    assert stats["curated"] == 0
+    assert len(streaming.archive_parts(streaming.make_catalog(conf))[1]) == 3
+    assert sorted(actions) == sorted(
+        ["first", "collect", "collect", "collect", "toPandas",
+         "write_stage", "write_stage"]
+    ), actions
+    assert len(actions) == BATCH_ACTION_BUDGET

@@ -395,19 +395,21 @@ def test_verify_broadcast_guard_falls_back_above_bound(spark):
     def rows_of(df):
         return {(r.doc_a, r.doc_b, r.jaccard) for r in df.collect()}
 
-    bcast = similarity._verify_pairs_jaccard(pairs, base, owner="t_vb")
-    fallback = similarity._verify_pairs_jaccard(
-        pairs, base, owner="t_vb2", broadcast_max_docs=1
-    )
-    got_b, got_f = rows_of(bcast), rows_of(fallback)
-    cache.unpin_all(owner="t_vb")
-    cache.unpin_all(owner="t_vb2")
-    assert got_b == got_f and got_b  # identical pairs on both paths
-    # under the bound the set table is broadcast on both join sides;
-    # over it, not forced (tiny frames may still auto-broadcast, so
-    # assert only the under-bound direction)
-    plan = bcast._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("BroadcastHashJoin") >= 2
+    try:
+        bcast = similarity._verify_pairs_jaccard(pairs, base, owner="t_vb")
+        fallback = similarity._verify_pairs_jaccard(
+            pairs, base, owner="t_vb2", broadcast_max_docs=1
+        )
+        got_b, got_f = rows_of(bcast), rows_of(fallback)
+        assert got_b == got_f and got_b  # identical pairs on both paths
+        # under the bound the set table is broadcast on both join sides;
+        # over it, not forced (tiny frames may still auto-broadcast, so
+        # assert only the under-bound direction)
+        plan = bcast._jdf.queryExecution().executedPlan().toString()
+        assert plan.count("BroadcastHashJoin") >= 2
+    finally:
+        cache.unpin_all(owner="t_vb")
+        cache.unpin_all(owner="t_vb2")
 
 
 def test_incremental_minhash_matches_batch(spark, tmp_path):
